@@ -16,8 +16,18 @@ Scale notes
   join output into the agg — strictly better than the reference's
   replication mapper, which multiplied volume by the opposite
   dimension (mapper/main.py:24-41, O(n^3) for dense n×n).
+- The exact path casts each operand entry to decimal once, before the
+  join, never once per join-output row (n³ casts for dense n×n).
 - When one operand is small (a vector, a skinny projection matrix) we
-  broadcast it — no shuffle at all on the big side.
+  broadcast it — no join shuffle on the big side. For an exact product
+  whose broadcast side has more than one output column, the streamed
+  side is hash-partitioned by its output-row key (i for A, k for B),
+  with no partition count so AQE sizes the shuffle to the data. That
+  one exchange of O(nnz) entries evaluates the cast once per entry and
+  already clusters the (i, k) agg, so no shuffle follows the join.
+  Against a vector, each streamed entry meets at most one broadcast
+  entry, so the plain broadcast join already casts it at most once
+  and shuffles only the partial sums.
 - For dense-dense at very large n the join-agg output explodes at the
   agg input (one row per (i,j,k) triple). ``matrix/block.py`` provides
   the SUMMA-style block algorithm (numpy kernels inside
@@ -141,24 +151,47 @@ class CooMatrix:
         ``exact=True`` sums products in decimal so the result is
         order-independent (needed for cross-engine hash checks and
         deterministic under AQE re-planning); pass False for raw
-        double speed.
+        double speed. Operands are cast once per entry, before the
+        join, so an entry outside decimal(18,4) fails the query even
+        when it has no join partner. The one exception is the streamed
+        side when the broadcast side is a vector (B with one column, or
+        A with one row): its cast runs per join match, so only an entry
+        with a partner fails.
+
+        An exact broadcast plan whose broadcast side has more than one
+        output key (columns of B, rows of A) hash-partitions the streamed side by its
+        output-row key (``i`` when B is broadcast, ``k`` when A is), so
+        the cast runs below that exchange and the groupBy(i, k) needs
+        no further shuffle; AQE picks the partition count. Neither
+        side under ``BROADCAST_MAX_ENTRIES`` gives a shuffled join.
         """
         validate_matmul_dims(self.n_rows, self.n_cols, other.n_rows, other.n_cols)
         a = self.with_names("i", "j").df
         b = other.with_names("j", "k").df.withColumnRenamed("v", "v_b")
+        if exact:
+            a = a.withColumn("v", F.col("v").cast(_DEC))
+            b = b.withColumn("v_b", F.col("v_b").cast(_DEC))
+        # Repartition the streamed side by its output-row key only when
+        # the exact path pairs each of its entries with several broadcast
+        # entries: the exchange then casts each entry once, not once per
+        # join match, and clusters the groupBy(i, k). Against a single
+        # broadcast column (a vector), or with no cast, it would only
+        # shuffle every streamed entry in place of the partial sums.
         if other.n_rows * other.n_cols <= BROADCAST_MAX_ENTRIES:
+            if exact and other.n_cols > 1:
+                a = a.repartition("i")
             b = F.broadcast(b)
         elif self.n_rows * self.n_cols <= BROADCAST_MAX_ENTRIES:
+            if exact and self.n_rows > 1:
+                b = b.repartition("k")
             a = F.broadcast(a)
-        joined = a.join(b, "j")
+        agg = F.sum(F.col("v") * F.col("v_b"))
         if exact:
-            prod = F.col("v").cast(_DEC) * F.col("v_b").cast(_DEC)
-            agg = F.sum(prod).cast("double").alias("v")
-        else:
-            agg = F.sum(F.col("v") * F.col("v_b")).alias("v")
+            agg = agg.cast("double")
         out = (
-            joined.groupBy("i", "k")
-            .agg(agg)
+            a.join(b, "j")
+            .groupBy("i", "k")
+            .agg(agg.alias("v"))
             .select("i", F.col("k").alias("j"), "v")
         )
         return CooMatrix(out, self.n_rows, other.n_cols)
@@ -169,27 +202,25 @@ class CooMatrix:
         The vector is broadcast — zero shuffle on the matrix side
         until the final (narrow) aggregation by i.
         """
-        x = F.broadcast(vec.select(F.col(idx).alias("__vj"), F.col(val).alias("__vx")))
-        joined = self.df.join(x, F.col(self.col) == F.col("__vj"))
-        prod = F.col(self.val).cast(_DEC) * F.col("__vx").cast(_DEC)
+        x = F.broadcast(
+            vec.select(F.col(idx).alias("__vj"), F.col(val).cast(_DEC).alias("__vx"))
+        )
+        m = self.df.select(self.row, self.col, F.col(self.val).cast(_DEC).alias("__mv"))
+        joined = m.join(x, F.col(self.col) == F.col("__vj"))
         return (
             joined.groupBy(F.col(self.row).alias("i"))
-            .agg(F.sum(prod).cast("double").alias("v"))
+            .agg(F.sum(F.col("__mv") * F.col("__vx")).cast("double").alias("v"))
         )
 
     def gram(self) -> "CooMatrix":
         """Aᵀ A via self-join on the row index (shared dim of AᵀA)."""
-        left = self.df.select(
-            F.col(self.row).alias("r"), F.col(self.col).alias("i"), F.col(self.val).alias("va")
-        )
-        right = self.df.select(
-            F.col(self.row).alias("r"), F.col(self.col).alias("k"), F.col(self.val).alias("vb")
-        )
-        prod = F.col("va").cast(_DEC) * F.col("vb").cast(_DEC)
+        r, c, v = F.col(self.row).alias("r"), F.col(self.col), F.col(self.val).cast(_DEC)
+        left = self.df.select(r, c.alias("i"), v.alias("va"))
+        right = self.df.select(r, c.alias("k"), v.alias("vb"))
         out = (
             left.join(right, "r")
             .groupBy("i", F.col("k").alias("j"))
-            .agg(F.sum(prod).cast("double").alias("v"))
+            .agg(F.sum(F.col("va") * F.col("vb")).cast("double").alias("v"))
             .select("i", "j", "v")
         )
         return CooMatrix(out, self.n_cols, self.n_cols)

@@ -380,6 +380,9 @@ def _entropy_symbols(qzz, pred: int):
     dc = zz[:, 0]
     diffs = dc - np.concatenate(([pred], dc[:-1]))
     dsz = _BITLEN[np.abs(diffs)]
+    dc_len = _DC_LEN_ARR[dsz]
+    if not dc_len.all():
+        raise KeyError(int(dsz[np.argmin(dc_len)]))  # as _code_block
     # AC nonzeros, block-major then position-major (np.nonzero order).
     mask = zz[:, 1:] != 0
     bi, pj = np.nonzero(mask)
@@ -419,7 +422,7 @@ def _entropy_symbols(qzz, pred: int):
     V = np.zeros(total, dtype=np.int64)
     W = np.zeros(total, dtype=np.int64)
     V[block_base] = _DC_CODE_ARR[dsz]
-    W[block_base] = _DC_LEN_ARR[dsz]
+    W[block_base] = dc_len
     V[block_base + 1] = np.where(diffs > 0, diffs, diffs + (1 << dsz) - 1)
     W[block_base + 1] = dsz
     if nz:

@@ -6,6 +6,7 @@ to be bit-deterministic across engines)."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import math
 import os
@@ -94,3 +95,23 @@ def assert_matches_oracle(spark_df, oracle: str, duck_con, max_show: int = 5):
             (a, b) for a, b in zip(s_norm, d_norm) if a != b
         ][:max_show]
         raise AssertionError(f"value mismatch; first diffs (spark, duckdb): {diffs}")
+
+
+@contextlib.contextmanager
+def matmul_broadcast_budget(spark, entries: int):
+    """Run CooMatrix.multiply with BROADCAST_MAX_ENTRIES = ``entries``
+    and Spark's own size-based broadcast off, so small test operands
+    can take each of multiply's three join plans: B broadcast (the
+    default), A broadcast (budget between the two operand sizes), or a
+    shuffled join (budget 0)."""
+    import matrix_multiplication_map_reduce_gcp_spark.matrix.coo as coo_mod
+
+    old = coo_mod.BROADCAST_MAX_ENTRIES
+    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    coo_mod.BROADCAST_MAX_ENTRIES = entries
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        coo_mod.BROADCAST_MAX_ENTRIES = old
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)

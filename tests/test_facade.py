@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from matrix_multiplication_map_reduce_gcp_spark.matrix.facade import multiply_json
 
+from .conftest import matmul_broadcast_budget
+
 
 def test_multiply_json_reference_wire_format(spark):
     rng = np.random.default_rng(5)
@@ -46,20 +48,11 @@ def test_big_big_matmul_never_nested_loop(spark):
     assert n * n < BROADCAST_MAX_ENTRIES  # sanity of the local config
     a = CooMatrix(big, n, n)
     # force the "both sides big" path by shrinking the threshold
-    import matrix_multiplication_map_reduce_gcp_spark.matrix.coo as coo_mod
-
-    old = coo_mod.BROADCAST_MAX_ENTRIES
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    coo_mod.BROADCAST_MAX_ENTRIES = 10
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with matmul_broadcast_budget(spark, 10):
         c = a.multiply(a)
         plan = c.df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        coo_mod.BROADCAST_MAX_ENTRIES = old
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
 
 def test_foreach_batch_exactly_once_shape(spark, tmp_path):

@@ -6,9 +6,11 @@ the disciplined version of the reference's own VM `np.dot` baseline
 from __future__ import annotations
 
 import json
+from fractions import Fraction
 
 import numpy as np
 import pytest
+from pyspark.errors import ArithmeticException
 
 from matrix_multiplication_map_reduce_gcp_spark.matrix import (
     CooMatrix,
@@ -16,6 +18,9 @@ from matrix_multiplication_map_reduce_gcp_spark.matrix import (
     shred_json_matrix,
     validate_matmul_dims,
 )
+from matrix_multiplication_map_reduce_gcp_spark.matrix.coo import BROADCAST_MAX_ENTRIES
+
+from .conftest import matmul_broadcast_budget
 
 RNG = np.random.default_rng(42)
 
@@ -76,6 +81,81 @@ def test_square_50x50_reference_live_shape(spark):
     b = RNG.integers(0, 100, (50, 50)).astype(float)
     C = to_coo(spark, a).multiply(to_coo(spark, b))
     np.testing.assert_allclose(dense(C), a @ b, rtol=0)
+
+
+# Budgets that force each multiply plan for a 6x7 A and a 7x9 B: the
+# default broadcasts B; 42 entries fits A but not B; 0 fits neither.
+_PLANS = {"broadcast_b": BROADCAST_MAX_ENTRIES, "broadcast_a": 42, "shuffled": 0}
+
+
+@pytest.mark.parametrize("plan", sorted(_PLANS))
+def test_matmul_two_decimal_operands_exact(spark, plan):
+    """Non-integer operands k/100: every product cell equals the exact
+    rational sum of products rounded once to double, whichever side is
+    broadcast (the decimal cast runs on the operand entries)."""
+    rng = np.random.default_rng(7)
+    ka = rng.integers(-999_999, 1_000_000, (6, 7))
+    kb = rng.integers(-999_999, 1_000_000, (7, 9))
+    ka[2, 3] = kb[4, 5] = 0  # implicit zeros stay out of the join
+    A, B = to_coo(spark, ka / 100), to_coo(spark, kb / 100)
+    with matmul_broadcast_budget(spark, _PLANS[plan]):
+        got = {(r.i, r.j): r.v for r in A.multiply(B).df.collect()}
+    want = {}
+    for i in range(6):
+        for k in range(9):
+            terms = [Fraction(int(ka[i, j]) * int(kb[j, k]), 10_000) for j in range(7)
+                     if ka[i, j] and kb[j, k]]
+            if terms:
+                want[(i, k)] = float(sum(terms))
+    assert got == want
+
+
+def test_gram_and_matvec_two_decimal_operands_exact(spark):
+    rng = np.random.default_rng(8)
+    ka = rng.integers(-999_999, 1_000_000, (6, 7))
+    kx = rng.integers(-999_999, 1_000_000, 7)
+    A = to_coo(spark, ka / 100)
+    gram = {(r.i, r.j): r.v for r in A.gram().df.collect()}
+    assert gram == {
+        (i, k): float(sum(Fraction(int(ka[r, i]) * int(ka[r, k]), 10_000) for r in range(6)))
+        for i in range(7)
+        for k in range(7)
+    }
+    xdf = spark.createDataFrame([(j, float(kx[j] / 100)) for j in range(7)], "j long, v double")
+    mv = {r.i: r.v for r in A.matvec(xdf).collect()}
+    assert mv == {
+        i: float(sum(Fraction(int(ka[i, j]) * int(kx[j]), 10_000) for j in range(7)))
+        for i in range(6)
+    }
+
+
+def _out_of_range_operands(case):
+    """A 6x7 A and 7x9 B with one 1e15 entry: joined with a partner
+    ("joined"), or meeting an empty row of B ("a_unjoined") or an empty
+    column of A ("b_unjoined")."""
+    a, b = np.arange(1.0, 43.0).reshape(6, 7), np.ones((7, 9))
+    if case == "b_unjoined":
+        a[:, 0] = 0
+        b[0, 3] = 1e15
+    else:
+        a[1, 2] = 1e15
+        if case == "a_unjoined":
+            b[2, :] = 0
+    return a, b
+
+
+@pytest.mark.parametrize("case", ["joined", "a_unjoined", "b_unjoined"])
+@pytest.mark.parametrize("plan", sorted(_PLANS))
+def test_matmul_operand_outside_decimal_range_raises(spark, plan, case):
+    """decimal(18,4) holds |v| < 1e14: an operand of 1e15 fails the
+    query instead of turning into NULL or a wrong sum. Every entry of a
+    multi-column operand is cast before the join, so it fails even when
+    nothing joins with it."""
+    a, b = _out_of_range_operands(case)
+    A, B = to_coo(spark, a), to_coo(spark, b)
+    with matmul_broadcast_budget(spark, _PLANS[plan]):
+        with pytest.raises(ArithmeticException, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+            A.multiply(B).df.collect()
 
 
 def test_transpose_add_scale_hadamard(mats, spark):

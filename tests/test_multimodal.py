@@ -1840,6 +1840,34 @@ def test_mpeg_rejects_corruption():
         mpeg_decode(bytes(bad))
 
 
+def test_mpeg_dc_size_outside_table_raises():
+    """An 8x8 checkerboard that flips between frames leaves P-frame
+    residual DC diffs of +-4080 (size category 12), past the DC Huffman
+    table's 0..11. The encoder must raise KeyError, as the sequential
+    _code_block does, not emit a zero-width DC code."""
+    import numpy as np
+    import pytest
+
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.mpeg import (
+        _BitWriter,
+        _code_block,
+        _quantize,
+        mpeg_encode,
+    )
+
+    board = (np.indices((16, 16)) // 8).sum(axis=0) % 2 * 255
+    f0 = board.astype(np.uint8)
+    f1 = (255 - board).astype(np.uint8)
+    mpeg_encode(16, 16, 5, [f0.tobytes()])  # the intra frame alone codes
+    with pytest.raises(KeyError, match="12"):
+        mpeg_encode(16, 16, 5, [f0.tobytes(), f1.tobytes()], search=1)
+    resid = _quantize(f1.astype(np.float64) - f0.astype(np.float64))
+    with pytest.raises(KeyError, match="12"):
+        pred = 0
+        for zz in resid.tolist():
+            pred = _code_block(_BitWriter(), zz, pred)
+
+
 def test_mpeg_encode_deterministic():
     import numpy as np
 
@@ -2114,6 +2142,30 @@ def test_mau2_rejects_corruption():
         mau2_decode(bytes(bad))
     with pytest.raises(ValueError, match="trailing"):
         mau2_decode(blob + b"\x00")
+
+
+def test_mau2_short_code_body_raises_mau2_underrun():
+    """A frame whose u16 body length (and body) is cut by one byte
+    passes the framing checks and must fail in the code unpack, with
+    the MAU2 label."""
+    import struct
+
+    import numpy as np
+    import pytest
+
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.mdct import (
+        mau2_decode,
+        mau2_encode,
+    )
+
+    blob = mau2_encode(8000, [((i * 37) % 2000) - 1000 for i in range(300)])
+    nib = np.unpackbits(np.frombuffer(blob[16:24], dtype=np.uint8)).reshape(-1, 4)
+    at = 24 + 4 * int((nib @ [8, 4, 2, 1] > 0).sum())  # frame 0's u16 body length
+    (blen,) = struct.unpack(">H", blob[at : at + 2])
+    assert blen > 0
+    cut = blob[:at] + struct.pack(">H", blen - 1) + blob[at + 2 : at + 1 + blen]
+    with pytest.raises(ValueError, match="truncated MAU2: bit stream underrun"):
+        mau2_decode(cut)
 
 
 def test_mau2_blobs_decode_on_spark(spark):

@@ -4,6 +4,8 @@ hot paths stay in whole-stage codegen, top-k never full-sorts."""
 
 from __future__ import annotations
 
+import re
+
 from matrix_multiplication_map_reduce_gcp_spark import registry
 from matrix_multiplication_map_reduce_gcp_spark.plans import (
     executed_plan,
@@ -13,7 +15,7 @@ from matrix_multiplication_map_reduce_gcp_spark.plans import (
     whole_stage_codegen_spans,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, matmul_broadcast_budget
 
 Q = registry.load_all()
 
@@ -51,6 +53,88 @@ def test_matmul_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
     assert "HashAggregate" in plan
+
+
+def _plan_ancestors(lines: list[str], idx: int) -> list[str]:
+    """Node lines above lines[idx] in an executed-plan tree string,
+    nearest first (depth = indent before the node name)."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out, d = [], depth(lines[idx])
+    for line in reversed(lines[:idx]):
+        if line.strip() and depth(line) < d:
+            out.append(line)
+            d = depth(line)
+    return out
+
+
+def _dense_coo(spark, n_rows, n_cols):
+    from pyspark.sql import functions as F
+
+    from matrix_multiplication_map_reduce_gcp_spark.matrix.coo import CooMatrix
+
+    df = spark.range(n_rows * n_cols).select(
+        (F.col("id") / n_cols).cast("long").alias("i"),
+        (F.col("id") % n_cols).alias("j"),
+        (F.col("id") % 97 / 4).alias("v"),
+    )
+    return CooMatrix(df, n_rows, n_cols)
+
+
+def _final_plan(df):
+    df.collect()  # AQE finalizes the plan only on execution
+    return executed_plan(df)
+
+
+def test_exact_matmul_casts_operands_once_per_entry(spark):
+    """Both broadcast plans of the exact multiply: the decimal cast is
+    evaluated below the streamed side's hash repartition on the output
+    row key (or inside the BroadcastExchange), never per join-output
+    row, and that repartition already clusters the groupBy(i, k), so
+    no Exchange sits between the join and the final HashAggregate."""
+    a, b = _dense_coo(spark, 20, 30), _dense_coo(spark, 30, 40)
+    plans = {"broadcast_b": (_final_plan(a.multiply(b).df), "i")}
+    with matmul_broadcast_budget(spark, 20 * 30):  # A fits, B does not
+        plans["broadcast_a"] = (_final_plan(a.multiply(b).df), "k")
+    for name, (text, key) in plans.items():
+        lines = text.splitlines()
+        assert "CartesianProduct" not in text and "BroadcastNestedLoop" not in text, name
+        assert re.search(rf"Exchange hashpartitioning\({key}#\d+L, \d+\)", text), name
+        casts = [n for n, line in enumerate(lines) if "as decimal(18,4))" in line]
+        assert casts, name
+        for n in casts:
+            nearest = next(
+                (x for x in _plan_ancestors(lines, n) if "Exchange" in x or "Join" in x), "root"
+            )
+            assert "Exchange hashpartitioning" in nearest or "BroadcastExchange" in nearest, (
+                name, lines[n], nearest)
+        joins = [n for n, line in enumerate(lines) if "BroadcastHashJoin" in line]
+        assert joins, name
+        for n in joins:
+            above = _plan_ancestors(lines, n)
+            assert not any("Exchange" in x for x in above), (name, above)
+            assert any("HashAggregate" in x and "partial_" not in x for x in above), name
+
+
+def test_matmul_streamed_side_not_repartitioned_without_fanout(spark):
+    """The streamed side keeps the plain broadcast join (partial agg,
+    then a shuffle of partial sums) when no repartition would save
+    casts: a single-column broadcast side, where each streamed entry
+    meets at most one broadcast entry, or exact=False, with no cast."""
+    a, b = _dense_coo(spark, 20, 30), _dense_coo(spark, 30, 40)
+    plans = {
+        "vector_b": (_final_plan(a.multiply(_dense_coo(spark, 30, 1)).df), "i"),
+        "inexact_b": (_final_plan(a.multiply(b, exact=False).df), "i"),
+    }
+    with matmul_broadcast_budget(spark, 30):  # the 1x30 A fits, B does not
+        plans["row_a"] = (_final_plan(_dense_coo(spark, 1, 30).multiply(b).df), "k")
+    with matmul_broadcast_budget(spark, 20 * 30):
+        plans["inexact_a"] = (_final_plan(a.multiply(b, exact=False).df), "k")
+    for name, (text, key) in plans.items():
+        assert "BroadcastHashJoin" in text, name
+        assert not re.search(rf"Exchange hashpartitioning\({key}#\d+L, \d+\)", text), name
+        assert "partial_sum" in text, name
 
 
 def test_hot_paths_have_codegen(spark):
